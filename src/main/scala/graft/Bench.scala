@@ -7,8 +7,8 @@ object Bench {
     * JSON row carries its spill/shuffle/peak-memory profile — added after
     * the round-5 q31/q32 bench variance (5x run-to-run swing) was
     * suspected to be storage-pressure-driven but undiagnosable from wall
-    * times alone. */
-  private class MetricsListener extends SparkListener {
+    * times alone. ScaleBench reads the same listener. */
+  private[graft] class MetricsListener extends SparkListener {
     @volatile var spillMem = 0L
     @volatile var spillDisk = 0L
     @volatile var shuffleWrite = 0L
@@ -23,6 +23,22 @@ object Bench {
       }
     }
     def reset(): Unit = { spillMem = 0L; spillDisk = 0L; shuffleWrite = 0L; peakExecMem = 0L }
+  }
+
+  /** Full storage flush between measurements: clearCache drops SQL-cached
+    * plans, and unpersisting every lingering RDD drops localCheckpoint
+    * residue (which clearCache does NOT touch) — without it cached_bytes
+    * read as a near-constant ~300 MB of warmup+checkpoint carry-over for
+    * every query, and late queries paid earlier queries' storage pressure
+    * (measured: q21 5.4 s cold vs 13.7 s late in a hash-ordered run).
+    * Callers must hold no live checkpointed frame: a dropped block's
+    * truncated lineage cannot be recomputed. */
+  private[graft] def clearStorage(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    // blocking: the next trial's "storage starts empty" premise (and
+    // cached_bytes attribution) is false if removal is still in flight
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
   }
 
   /** 1-minute system load average, or -1 where the JVM can't read it —
@@ -89,22 +105,7 @@ object Bench {
     // an expensive one) to warm the SQL/codegen pipeline itself
     try SparkEntry.queries("q02_filter_project")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    // full storage flush between measurements: clearCache drops SQL-cached
-    // plans, and unpersisting every lingering RDD drops localCheckpoint
-    // residue (which clearCache does NOT touch) — without it cached_bytes
-    // read as a near-constant ~300 MB of warmup+checkpoint carry-over for
-    // every query, and late queries paid earlier queries' storage pressure
-    // (measured: q21 5.4 s cold vs 13.7 s late in a hash-ordered run).
-    // Prior queries' checkpointed RDDs are dead at this point, so the
-    // truncated lineage is never re-demanded.
-    def clearStorage(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      // blocking: the next trial's "storage starts empty" premise (and
-      // cached_bytes attribution) is false if removal is still in flight
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-    clearStorage()
+    clearStorage(spark)
     // variance-prone headline queries take the median of 3 cold trials so
     // one loaded-sandbox run can't fake (or mask) a regression — the r7
     // driver bench reported the pipeline at 29.4 s where a same-commit
@@ -134,7 +135,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val trials = if (headline(name)) 3 else 1
       val runs = (1 to trials).map { _ =>
-        clearStorage()
+        clearStorage(spark)
         listener.reset()
         val t0 = System.nanoTime()
         // a throwing query is NOT silently folded into the totals: its
@@ -175,7 +176,7 @@ object Bench {
     // SparkEntry oracle row
     val pipelineSec = {
       val ts = (1 to 3).map { _ =>
-        clearStorage()
+        clearStorage(spark)
         val tp = System.nanoTime()
         try {
           materialize(graft.operators.DocumentPipeline.curate(spark, sfDir))

@@ -167,8 +167,7 @@ object CurationBench {
     // residue so the update measurement doesn't depend on what ran before
     // it (same accumulated-storage skew Bench.scala clears per query —
     // measured update 43.6 vs 24.4 rec/s run-to-run without this)
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    graft.Bench.clearStorage(spark)
 
     // update phase: partial preload becomes the store, complete data re-curated
     if (scenario == "update" || scenario == "both") {
@@ -261,8 +260,7 @@ object CurationBench {
       if (scenario.startsWith("high_author_x")) scenario.stripPrefix("high_author_x").toInt
       else 1
     if (scenario.startsWith("high_author") || scenario == "both") {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      graft.Bench.clearStorage(spark)
       val rec = highAuthorBatch(spark, highRecords)
       val t2 = System.nanoTime()
       val hf = Curator.curateFresh(rec).checkpointed

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * above the last exchange a SECOND time. For the quadratic verify stages
   * that means re-paying the whole candidate join + kernel pass: measured
   * at sf0.1, q19 6.9 s -> 16.1 s, q21 6.6 s -> 12.6 s, q34 2.9 s -> 5.1 s
-  * once the trailing orderBy is attached (PerfProbe, r18).
+  * once the trailing orderBy is attached (r18).
   *
   * Fix (guide §3.3 "materialise an intermediate result"): eagerly
   * localCheckpoint the ANSWER rows — post-filter, orders of magnitude

@@ -669,17 +669,32 @@ object Dedup {
     * canonicalize equal — so without the checkpoint the signature
     * subtree computes once per side. The checkpoint stays load-bearing;
     * see [[bandedSignatures]].) */
-  /** The (doc_id, band, bh) table: signature of bands*rows permutations,
-    * one bucket hash per band (xxhash64 of the band's row slice, salted by
-    * the band index). Base hashes are a per-element pmod over the
-    * already-hashed shingle array — cheap enough to inline into the
-    * signature projection. */
   /** Array of `bands` 64-bit band keys from a minhash signature: band b's
     * key hashes signature rows [b*rows, (b+1)*rows) salted with b. */
   private[graft] def bandKeys(sig: Column, bands: Int, rows: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(slice(sig, b * lit(rows) + lit(1), lit(rows)), b))
 
+  /** The (doc_id, bh) table: signature of bands*rows permutations, one
+    * bucket hash per band (xxhash64 of the band's row slice, salted by
+    * the band index). Base hashes are a per-element pmod over the
+    * already-hashed shingle array — cheap enough to inline into the
+    * signature projection.
+    *
+    * Join contract (r19): rows are (doc_id, bh) ONLY — the band index is
+    * folded into bh ([[bandKeys]] seeds xxhash64 with it), so consumers
+    * self-join on bh alone. That join admits a cross-band collision with
+    * p = 2^-64 per row pair (~1e-6 expected birthday mass even at a 5 M-row
+    * frame), so it is sound only because EVERY consumer exact-verifies and
+    * distincts its candidate pairs; a new consumer that skips either step
+    * must key on (band, bh) instead. In exchange the checkpoint and the
+    * band exchange drop the 8 B/row band column and the join key narrows
+    * to one 64-bit word (q22 band join + dedup 1.61 -> 1.37 s). The SLICED
+    * branch keeps explicit band indices — its first-collision suppression
+    * predicate needs them ([[bandedSignaturesSlice]]). Guard: OperatorsSpec
+    * "band-group-sliced candidate generation equals the single-piece
+    * frame" compares this bh-only single-piece frame with the
+    * (band, bh)-keyed slices. */
   private def bandedSignatures(sets: DataFrame, bands: Int, rows: Int): DataFrame = {
     import sets.sparkSession.implicits._
     // STILL checkpointed after the r18 probe (re-confirmed r19, ~2.7x):
@@ -687,22 +702,10 @@ object Dedup {
     // band self-join's two repartition exchanges do NOT collapse into one
     // (plan_ids stay distinct even canonicalized under AQE), so without
     // the checkpoint the bands*rows-hash-per-doc signature subtree
-    // computes once per side (Q22StageProbe r19: join+dedup 1.4 s
-    // checkpointed vs 4.4 s recomputed at local[32]). The r18 win here is
+    // computes once per side (r19, q22: join+dedup 1.4 s checkpointed
+    // vs 4.4 s recomputed at local[32]). The r18 win here is
     // upstream: the envelope branch no longer runs a count() job against
     // this frame (rows = nDocs * bands by construction).
-    //
-    // r19: rows are (doc_id, bh) ONLY — the band index is folded into bh
-    // (bandKeys seeds xxhash64 with the band index, so bh is band-salted
-    // by construction). Joining on bh alone admits a cross-band collision
-    // with p = 2^-64 per row pair (~1e-6 expected birthday mass even at a
-    // 5 M-row frame), and every consumer exact-verifies and distincts its
-    // candidate pairs, so the pair set is unchanged while the checkpoint
-    // and the band exchange drop the 8 B/row band column and the join key
-    // narrows to one 64-bit word (Q22StageProbe: band join + dedup
-    // 1.61 -> 1.37 s). The SLICED branch keeps explicit band indices —
-    // its first-collision suppression predicate needs them
-    // (bandedSignaturesSlice).
     sets.select($"doc_id",
         minhashSignature(shingleBaseHashes($"hv"), bands, rows).as("sig"))
       .select($"doc_id", explode(bandKeys($"sig", bands, rows)).as("bh"))
@@ -1203,7 +1206,7 @@ object Dedup {
     // threshold (HALF_UP rounding moves a value by < 5e-7), so the cheap
     // raw-double compare prunes ~all pairs before the expensive rounded
     // compare — Catalyst's Round on DoubleType allocates a BigDecimal per
-    // evaluation (measured ~0.8 us/pair, r18 PerfProbe: the 2M-pair filter
+    // evaluation (measured ~0.8 us/pair, r18: the 2M-pair filter
     // was 1.26 s raw vs 2.92 s rounded). The rounded filter still decides
     // every boundary pair, so results are bit-identical.
     e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")

@@ -242,7 +242,7 @@ object TextQueries {
     * columns stand in for the reference's metadata dict (family/given/
     * title/venue/issn/year/volume/issue/pages,
     * `lib/bibliographic_matching.py:167-178`). */
-  private[operators] def biblioMeta(s: SparkSession, dir: String): DataFrame = {
+  private def biblioMeta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     part(s, dir).select(
       $"p_partkey", $"p_brand", substring($"p_name", 1, 1).as("blk"),

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -133,19 +132,6 @@ object ScaleBench {
     def shutdown(): Unit = live = false
   }
 
-  private class MetricsListener extends SparkListener {
-    @volatile var spillDisk = 0L
-    @volatile var shuffleWrite = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        spillDisk += m.diskBytesSpilled
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-    def reset(): Unit = { spillDisk = 0L; shuffleWrite = 0L }
-  }
-
   def main(args: Array[String]): Unit = {
     val factors = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10)
     // partial re-measure support: SPARK_GRAFT_OPS=q61_substring_dedup,...
@@ -182,7 +168,7 @@ object ScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new MetricsListener
+    val listener = new graft.Bench.MetricsListener
     spark.sparkContext.addSparkListener(listener)
     val sampler = new DiskSampler(new java.io.File(
       System.getProperty("java.io.tmpdir", "/tmp")))
@@ -267,8 +253,7 @@ object ScaleBench {
       }, 100))
 
     def clearStorage(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      graft.Bench.clearStorage(spark)
       // shuffle files live until the driver GCs their ShuffleDependency
       // and the ContextCleaner reaps them — across a 3-rung x14-op run
       // the dead files accumulate to tens of GB and starve the x100 ops
@@ -346,8 +331,8 @@ object ScaleBench {
     // build once (the only full-corpus shuffle), probe via broadcast
     // probe-list + DPP-pruned partition scan, append without rebuild.
     // This measures all three phases at the top rung and captures the
-    // executed probe plan's dynamic-pruning receipt (PlanProbe's check,
-    // as a committed number instead of an eyeballed plan dump).
+    // executed probe plan's dynamic-pruning receipt, as a committed
+    // number instead of an eyeballed plan dump.
     if (opsFilter.isEmpty || opsFilter.contains("ivf_index")) {
       import org.apache.spark.sql.functions._
       import graft.operators.{IvfIndex, Similarity}

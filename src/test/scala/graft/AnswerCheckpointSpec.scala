@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r19 (VERDICT r18 #7): pins that the PRODUCTION plan of an answer-mass
@@ -11,6 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ExplainAuditSpec runs wholly under Answer.planAuditBypass (it grades
   * the working pipeline), so without this spec a silent revert of
   * Answer.sorted to the double-computing orderBy would pass every test.
+  * It covers one query per Answer.sorted caller family: the brand-blocked
+  * Levenshtein verify (q19), the LSH-fronted match score (q22) and the
+  * simhash dedup (q33).
   */
 class AnswerCheckpointSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -22,29 +25,41 @@ class AnswerCheckpointSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
+  /** Every node of the plan, descending into adaptive wrappers, query
+    * stages and subquery plans as well as children. */
   private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
     val expanded = p match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
+      case s: QueryStageExec => s.plan
       case other => other
     }
-    expanded +: expanded.children.flatMap(allNodes)
+    expanded +: (expanded.children ++ expanded.subqueries).flatMap(allNodes)
   }
 
-  test("production q33 final sort scans the checkpointed answer (ExistingRDD)") {
-    assert(!graft.operators.Answer.planAuditBypass,
-      "spec must observe the production path")
-    // constructing the query executes the pipeline (the checkpoint is
-    // eager by design); sf0.001 keeps that cheap
-    val df = SparkEntry.queries("q33_dedup_simhash")(spark, dir)
-    val nodes = allNodes(df.queryExecution.executedPlan)
-    assert(nodes.exists(_.isInstanceOf[SortExec]), "final sort missing")
-    assert(nodes.exists(_.isInstanceOf[RDDScanExec]),
-      "expected the final sort to read the eager localCheckpoint " +
-        "(Scan ExistingRDD) — Answer.sorted may have silently reverted " +
-        "to the double-computing plain orderBy")
-    // and the checkpoint truncated the lineage: no parquet scan survives
-    // in the as-constructed plan
-    assert(!nodes.exists(_.nodeName.toLowerCase.contains("parquet")),
-      "as-constructed plan still contains the full pipeline above the sort")
+  for ((short, query) <- Seq("q19" -> "q19_levenshtein",
+      "q22" -> "q22_lsh_match_score", "q33" -> "q33_dedup_simhash")) {
+    test(s"production $short final sort scans the checkpointed answer (ExistingRDD)") {
+      assert(!graft.operators.Answer.planAuditBypass,
+        "spec must observe the production path")
+      // constructing the query executes the pipeline (the checkpoint is
+      // eager by design); sf0.001 keeps that cheap
+      val df = SparkEntry.queries(query)(spark, dir)
+      val nodes = allNodes(df.queryExecution.executedPlan)
+      val finalSort = nodes.collectFirst { case s: SortExec => s }
+      assert(finalSort.isDefined, s"$query: final sort missing")
+      // the sort's ONLY input is the checkpoint: a pipeline that merely
+      // contains some other checkpoint (q22's banded signatures) is not
+      // enough
+      val sortLeaves = allNodes(finalSort.get).filter(_.children.isEmpty)
+      assert(sortLeaves.size == 1 && sortLeaves.head.isInstanceOf[RDDScanExec],
+        s"$query: expected the final sort to read the eager localCheckpoint " +
+          "(Scan ExistingRDD) — Answer.sorted may have silently reverted " +
+          "to the double-computing plain orderBy; sort leaves: " +
+          sortLeaves.map(_.nodeName).mkString(", "))
+      // and the checkpoint truncated the lineage: no file scan survives
+      // in the as-constructed plan
+      assert(!nodes.exists(_.isInstanceOf[FileSourceScanExec]),
+        s"$query: as-constructed plan still contains the full pipeline above the sort")
+    }
   }
 }

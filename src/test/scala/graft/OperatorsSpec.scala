@@ -45,8 +45,13 @@ class OperatorsSpec extends AnyFunSuite {
     val sliced = pairSet(sets.count() * 5)      // forces ~7 slices of 5 bands
     val oneBand = pairSet(1L)                   // degenerate: 1 band per slice
     assert(whole.nonEmpty)
-    assert(sliced == whole, "band-group slicing must be loss-free and exact")
-    assert(oneBand == whole)
+    // whole = the bh-only single-piece join (Dedup.bandedSignatures);
+    // sliced/oneBand = the (band, bh)-keyed slices
+    val contract = "the bh-only band join must equal the (band, bh)-keyed " +
+      "join; it admits 2^-64 cross-band collisions, so every consumer must " +
+      "exact-verify and distinct its candidate pairs (Dedup.bandedSignatures)"
+    assert(sliced == whole, s"band-group slicing must be loss-free and exact: $contract")
+    assert(oneBand == whole, contract)
     // refined path: pushing a per-pair refine (here an id-parity filter +
     // annotation — deterministic per pair, like the production Jaccard
     // verify) INSIDE the slices must equal refine-after-candidates
